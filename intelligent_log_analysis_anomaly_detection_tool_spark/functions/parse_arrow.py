@@ -1,22 +1,49 @@
-"""P1-P8 parse stage, Arrow-native variant.
+"""P1-P8: the grok/parse stage, Arrow-native (the engine's only parse kernel).
 
-Same semantics as functions/parse.py (the trusted pandas implementation,
-itself oracle-parity-tested), but runs on pyarrow RecordBatches via
-``mapInArrow`` + ``pyarrow.compute`` — no Python string objects are ever
-materialized, which removes the dominant per-row cost of the pandas path
-(Arrow->pandas object conversion + object-dtype regex).
+Mirrors the reference parser control flow (LogParser.cpp:57-98) so the
+per-turn text-equality invariant holds:
+
+- trim; empty -> malformed "Empty line" (LogParser.cpp:61-67)
+- '{' prefix -> hand-rolled JSON scan with alias keys (LogParser.cpp:152-229)
+- else heuristic plain parse (LogParser.cpp:125-147):
+    * timestamp: first 19 chars, digits at fixed offsets, separators UNCHECKED
+      (TimeUtils.cpp:73-112 checks only the six numeric fields)
+    * level: ordered substring search over the UPPERCASED WHOLE LINE —
+      TRACE,DEBUG,INFO,WARN,WARNING,ERROR,FATAL,CRITICAL; first hit wins
+      (LogParser.cpp:306-338). A line containing both INFO and ERROR is Info.
+    * source: first ':'-prefix without spaces, else first '[...]' content —
+      for plain ``ts [LEVEL] svc - msg`` lines this captures the LEVEL token
+      (quirk, LogParser.cpp:340-366)
+    * message: drop first 20 chars, trim, split on single spaces keeping
+      empties, join tokens[2:] with single spaces == substring after the 2nd
+      space (LogParser.cpp:368-399)
+- malformed taxonomy: "Empty line" / "No matching pattern" /
+  "JSON missing required fields: ..." / "Invalid timestamp format"
+  (LogParser.cpp:65,96,171-178,214)
+
+Runs on pyarrow RecordBatches via ``mapInArrow`` + ``pyarrow.compute``: no
+Python string objects are ever materialized. ``parse_arrays`` is the bare
+kernel; tests pin it to ``oracle.reference_oracle.parse_line`` on edge
+lines, the full fixture and hypothesis fuzz.
 
 All regexes are RE2 (pyarrow) — every pattern used here is RE2-safe (no
 backrefs in patterns; ``\\1`` appears only in replacements, which RE2
-supports). Timestamp parsing uses strptime on a re-rendered canonical string
-built from the six digit fields, preserving the reference's
-"digits at fixed offsets, separators unchecked" rule and rejecting
-impossible dates exactly like the oracle.
+supports). Digit classes are ``[0-9]``: the C++ parser is ASCII-strict
+(TimeUtils.cpp parseIntField checks '0'..'9'). Timestamp parsing uses
+strptime on a re-rendered canonical string built from the six digit fields,
+preserving the reference's "digits at fixed offsets, separators unchecked"
+rule.
 
-Known (documented) divergence from the pandas path: non-ASCII FULL case
-mapping in the level scan (python ``str.upper`` expands ligatures,
-``utf8_upper`` does not). Log level tokens are ASCII; the parity and fuzz
-suites cover the realistic alphabet.
+Known (documented) divergences:
+
+- from the C++ reference: it routes timestamps through ``mktime``
+  (localtime + field normalization, e.g. month 13 wraps). We pin UTC and
+  coerce impossible dates to parse failure, as the oracle does; fixtures
+  avoid such lines.
+- from the oracle: non-ASCII FULL case mapping in the level scan. The
+  oracle's python ``str.upper`` expands ligatures, ``utf8_upper`` does not.
+  Log level tokens are ASCII; the parity and fuzz suites cover the
+  realistic alphabet.
 """
 
 from __future__ import annotations
@@ -32,6 +59,7 @@ from pyspark.sql import functions as F
 
 from ..schema import PARSED_STRUCT
 
+# C++ std::isspace set (LogParser.cpp trimSv / Utils::trim)
 CPP_WS = " \t\n\v\f\r"
 _WS_CLS = r"[ \t\n\v\f\r]*"
 
@@ -40,10 +68,13 @@ _TS_RE = (
     r".(?P<h>[0-9]{2}).(?P<mi>[0-9]{2}).(?P<s>[0-9]{2})"
 )
 
+# plain-path level search order (LogParser.cpp:314-323)
 PLAIN_LEVELS = [
     ("TRACE", 0), ("DEBUG", 1), ("INFO", 2), ("WARN", 3),
     ("WARNING", 3), ("ERROR", 4), ("FATAL", 5), ("CRITICAL", 5),
 ]
+# JSON-path level search order (LogParser.cpp:218-226): no WARNING alias,
+# CRIT prefix covers CRITICAL.
 JSON_LEVELS = [
     ("TRACE", 0), ("DEBUG", 1), ("INFO", 2), ("WARN", 3),
     ("ERROR", 4), ("CRIT", 5), ("FATAL", 5),
@@ -97,7 +128,11 @@ def _level_scan(upper, table):
 
 
 def _json_value(t, key: str):
-    """extractJsonRaw semantics (see parse.py) in RE2.
+    """extractJsonRaw semantics (LogParser.cpp:238-281) in RE2: find
+    ``"key"`` anywhere, first ':' after it, skip ws; quoted -> unescape
+    ``\\x -> x``; unquoted -> read to ','/'}' and trim; null when the
+    key/colon is absent or only whitespace follows the colon
+    (LogParser.cpp:248-249).
 
     Probe order is lazy but result-identical to the original
     quoted/raw/dead full-column plan: the raw-value scan runs only over
@@ -273,7 +308,7 @@ def parse_arrays(text: pa.Array) -> dict:
     densely, and one gather per output column reassembles row order
     (``_scatter``). On the mixed corpus (~35% JSON / ~50% plain) this
     removes roughly half the regex work of the former full-column
-    compute-then-mask plan — same semantics, pinned by the pandas-parity
+    compute-then-mask plan — same semantics, pinned by the oracle-parity
     edge/fixture/fuzz suites."""
     if isinstance(text, pa.ChunkedArray):
         text = text.combine_chunks()

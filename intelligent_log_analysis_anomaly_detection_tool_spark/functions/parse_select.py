@@ -1,31 +1,18 @@
-"""Default parse-stage implementation selector.
+"""The parse-stage names the rest of the engine imports.
 
-Two oracle-parity-tested implementations of P1-P8 exist:
-
-- ``parse.parse_stage`` — pandas UDF (the original, trusted reference
-  implementation; oracle-equality and fuzz tested)
-- ``parse_arrow.parse_stage_arrow`` — Arrow-native ``mapInArrow`` +
-  pyarrow.compute (no Python string objects; measured ~2.2x faster on the
-  6.9M-row bench at every parallelism level, and kernel-parity tested
-  against the pandas path on edges + hypothesis fuzz)
-
-The batch pipeline defaults to the Arrow path; set
-``SPARK_GRAFT_PARSE_IMPL=pandas`` to fall back.
+P1-P8 has one implementation, ``parse_arrow.parse_stage_arrow``
+(``mapInArrow`` + pyarrow.compute, oracle-parity tested on edge lines, the
+full fixture and hypothesis fuzz). These are thin names over it.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
-from .parse import parse_stage as parse_stage_pandas
 from .parse_arrow import parse_stage_arrow
 
 
 def parse_stage(df: DataFrame, text_col: str = "text") -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_PARSE_IMPL", "arrow") == "pandas":
-        return parse_stage_pandas(df, text_col)
     return parse_stage_arrow(df, text_col)
 
 
@@ -42,11 +29,6 @@ PIPELINE_DROP = ("text", "ts", "was_json")
 def parse_stage_pipeline(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Parse stage narrowed for the batch pipeline DAG (run_pipeline, the
     scaling/bench harnesses): same rows and values as ``parse_stage`` minus
-    the ``PIPELINE_DROP`` columns. The Arrow path drops them inside the
-    exchange (raw ``ts`` never crosses in either direction; ``text`` crosses
-    inbound only); the pandas fallback parses full-width then projects,
-    keeping its oracle-parity-tested kernel untouched."""
-    if os.environ.get("SPARK_GRAFT_PARSE_IMPL", "arrow") == "pandas":
-        out = parse_stage_pandas(df, text_col)
-        return out.drop(*[c for c in PIPELINE_DROP if c in out.columns])
+    the ``PIPELINE_DROP`` columns, dropped inside the exchange (raw ``ts``
+    never crosses in either direction; ``text`` crosses inbound only)."""
     return parse_stage_arrow(df, text_col, drop=PIPELINE_DROP)

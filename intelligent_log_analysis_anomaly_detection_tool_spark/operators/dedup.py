@@ -436,7 +436,12 @@ def _jaccard_blocked_bitset(arr: DataFrame, id_col: str,
       allocation/page-fault bound — /proc/stat showed 40-57% sys). Exact
       inter values are recomputed for the few surviving pairs via einsum.
     """
-    ids = arr.filter(F.col("shh_arr").isNotNull()).withColumn(
+    # NULL text shingles to [NULL]: strip null elements (the count_join /
+    # prefix explode drops them too) and the docs left empty, so NULL docs
+    # never pair and the kernel's hash buffer stays int64
+    ids = arr.withColumn(
+        "shh_arr", F.filter("shh_arr", lambda x: x.isNotNull())
+    ).filter(F.size("shh_arr") > 0).withColumn(
         "blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
     )
     # one side-tagged union instead of a self-cogroup (avoids Spark's

@@ -1,13 +1,26 @@
 """Fused W1+W2 pass: SpikeDetector and StatisticalDetector share one sort.
 
 Both detectors key by (conv_id, source) and order by event time
-(/root/reference/src/anomaly/SpikeDetector.cpp:24-85 and
-StatisticalDetector.cpp:28-77 walk the same per-source deques over the same
-arrival order), so their window columns — trailing counts, range min, prefix
-mean/stddev — can be computed over ONE exchanged + sorted frame instead of
-two. At 6.9M rows the duplicate (conv_id, source) WindowExec sort was worth
-~5-8 s of the online-branch wall; at 100 TB it is a full extra shuffle+sort
-of the parsed table.
+(SpikeDetector.cpp:24-85 and StatisticalDetector.cpp:28-77 walk the same
+per-source deques over the same arrival order), so their window columns —
+trailing counts, range min, prefix mean/stddev — can be computed over ONE
+exchanged + sorted frame instead of two. At 6.9M rows the duplicate
+(conv_id, source) WindowExec sort was worth ~5-8 s of the online-branch
+wall; at 100 TB it is a full extra shuffle+sort of the parsed table.
+
+W1 reference semantics (SpikeDetector.cpp:24-85, 158-213; defaults
+SpikeDetector.hpp:143-146):
+
+- per source, trailing event-time windows of 60s (short) and 600s (baseline),
+  both including the current row; eviction strictly ``age > W``
+- ratio = (cur/60)/(base/600); fire iff ratio > 3.0 && cur >= 5 && base >= 10
+- severity = min(1, (ratio-1)/(threshold-1)) is then always 1.0, so
+  main.cpp:295-309 always maps it to Critical
+- rateOfChange is dead code (SpikeDetector.cpp:177-180) -> ROC=0.00
+- anomaly: type FrequencySpike, window [ts-60s, ts], score = ratio
+
+W2 semantics are documented in statistical.py, whose standalone plan backs
+the ``statistical_detector`` query of ``__spark_entry__``.
 
 Plan shape (pinned by tests/test_plan_shapes.py): exactly one Exchange
 hashpartitioning(conv_id, source) and one Sort
@@ -19,16 +32,18 @@ a filtered-array explode — the same one-pass trick as
 pattern.pattern_anomalies, so the fused branch never consumes the frame
 twice.
 
-Semantics are the standalone detectors' exactly: spike excludes
-empty-source rows (SpikeDetector.cpp:32-37) — but since ``source`` is a
-partition key, dropping those rows pre-window or masking the fire condition
-post-window is the same thing; statistical keeps them.
+Spike excludes empty-source rows (SpikeDetector.cpp:32-37) — but since
+``source`` is a partition key, dropping those rows pre-window or masking
+the fire condition post-window is the same thing; statistical keeps them.
 """
 
 from __future__ import annotations
 
+import pandas as pd
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from ...config import SpikeConfig, StatisticalConfig
 from .common import (
@@ -37,12 +52,27 @@ from .common import (
 )
 
 
+def _fmt_factory(window_s: int):
+    """W1 description; printf-style half-even rounding matches C++ iostreams."""
+    @pandas_udf("string")
+    def fmt(source: pd.Series, cur: pd.Series, ratio: pd.Series) -> pd.Series:
+        return pd.Series(
+            [
+                f"Spike detected: {s} ({int(c)} events in {window_s}s, "
+                f"{r:.1f}x baseline, ROC=0.00"
+                for s, c, r in zip(source, cur, ratio)
+            ],
+            index=source.index,
+        )
+
+    return fmt
+
+
 def spike_statistical_anomalies(
     parsed: DataFrame,
     spike_cfg: SpikeConfig = SpikeConfig(),
     stat_cfg: StatisticalConfig = StatisticalConfig(),
 ) -> DataFrame:
-    from .spike import _fmt_factory
     from .statistical import _fmt
 
     keys = ("conv_id", "source")

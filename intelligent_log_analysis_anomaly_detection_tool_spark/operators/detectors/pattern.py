@@ -269,7 +269,9 @@ def _sig_base(parsed: DataFrame, cfg: PatternConfig) -> DataFrame:
     # THIS cache instead of re-reading ``parsed`` — in the standalone query
     # (parsed not persisted) that second read recomputed the whole
     # render+parse subtree (r6; measured ~a third of q_pattern_novel).
-    # _lead_cols never selects it, so no window pass moves it.
+    # _lead_cols never selects it, so no window pass moves it. A frame
+    # without ts_parsed gets a NULL column: novel_sequences needs no
+    # timestamps, and pattern_anomalies rejects such a frame up front.
     ts_col = (
         F.col("ts_parsed")
         if "ts_parsed" in parsed.columns
@@ -570,6 +572,11 @@ def novel_sequences(parsed: DataFrame, cfg: PatternConfig = PatternConfig(),
 
 
 def pattern_anomalies(parsed: DataFrame, cfg: PatternConfig = PatternConfig()) -> DataFrame:
+    if "ts_parsed" not in parsed.columns:
+        raise ValueError(
+            "pattern_anomalies needs a ts_parsed column for its per-conversation "
+            f"windows; got columns {parsed.columns}"
+        )
     # [min_ts, max_ts] per conv from the SHARED persisted base (its rows are
     # exactly parsed's non-malformed rows; pad rows duplicate rows of the
     # same conversation, so the min/max are unchanged by them) — reading

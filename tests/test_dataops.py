@@ -304,15 +304,21 @@ def test_choose_jaccard_plan():
 
 
 def test_jaccard_three_plans_identical(spark, docs):
-    """dense / count_join / prefix must produce identical exact results."""
+    """dense / count_join / prefix must produce identical exact results,
+    also with NULL-text docs in the corpus (they pair with nothing)."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.dedup import (
         ngram_jaccard_pairs,
     )
 
+    base = docs.select("doc_id", "text")
+    top = base.agg(F.max("doc_id")).first()[0]
+    corpus = base.unionByName(
+        spark.createDataFrame([(top + k, None) for k in (1, 2, 3)], base.schema)
+    )
     outs = {}
     for plan in ("dense", "count_join", "prefix"):
         pdf = ngram_jaccard_pairs(
-            docs, shingle_n=2, threshold=0.2, plan=plan
+            corpus, shingle_n=2, threshold=0.2, plan=plan
         ).toPandas()
         outs[plan] = pdf.sort_values(["doc_a", "doc_b"], ignore_index=True)
     assert len(outs["dense"]) > 0
@@ -425,8 +431,9 @@ def test_cosine_near_dup_exact_matches_numpy(spark, emb):
 def test_jaccard_dense_kernel_adversarial(spark):
     """r6 kernel stress: many blocks (several groups per task, so the
     buffer-reuse cache sees varying shapes), empty texts, exact duplicates,
-    a NULL text, and the threshold=0.0 edge (inter > 0 must still gate
-    emission). Forced-dense output must equal the count-join on all of it."""
+    several NULL texts (which must not pair with each other), and the
+    threshold=0.0 edge (inter > 0 must still gate emission). Forced-dense
+    output must equal the count-join on all of it."""
     import random
 
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.dedup import (
@@ -445,7 +452,7 @@ def test_jaccard_dense_kernel_adversarial(spark):
         if i % 23 == 0 and i:
             txt = rows[i - 1][1]
         rows.append((i, txt))
-    rows.append((601, None))
+    rows += [(601, None), (602, None), (603, None)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     for thr in (0.3, 0.0):

@@ -5,7 +5,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
     parse_stage,
 )
 
@@ -76,11 +76,16 @@ def test_rare_ip(parsed_df, oracle_result):
 
 
 def test_spike(parsed_df, oracle_result):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.spike import (
-        spike_anomalies,
+    """W1 alone: the fused pass's spike rows."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.online_fused import (
+        spike_statistical_anomalies,
     )
 
-    got = spike_anomalies(parsed_df).toPandas()
+    got = (
+        spike_statistical_anomalies(parsed_df)
+        .filter("detector = 'spike'")
+        .toPandas()
+    )
     want = _oracle_det(oracle_result, "spike")
     assert len(want) > 0, "fixture must exercise W1"
     _compare(got, want)
@@ -99,7 +104,7 @@ def test_statistical(parsed_df, oracle_result):
 
 def test_fused_spike_statistical(parsed_df, oracle_result):
     """The fused W1+W2 pass (one shared sort, used by online_anomalies) must
-    emit exactly the union of the standalone detectors' oracle rows."""
+    emit exactly the union of the spike and statistical oracle rows."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.online_fused import (
         spike_statistical_anomalies,
     )
@@ -153,6 +158,17 @@ def test_pattern(parsed_df, oracle_result):
     want = _oracle_det(oracle_result, "pattern")
     assert len(want) > 0, "fixture must exercise A10/A11"
     _compare(got, want)
+
+
+def test_pattern_requires_ts_parsed(parsed_df):
+    """A frame without ts_parsed is a schema mistake: pattern_anomalies
+    refuses it instead of emitting NULL windows."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.pattern import (
+        pattern_anomalies,
+    )
+
+    with pytest.raises(ValueError, match="ts_parsed"):
+        pattern_anomalies(parsed_df.drop("ts_parsed"))
 
 
 def test_parser_malformed(parsed_df, oracle_result):

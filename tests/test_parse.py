@@ -1,4 +1,4 @@
-"""Parse-stage parity: vectorized pandas path == per-row oracle == quirks.
+"""Parse-stage parity: the Arrow parse kernel == per-row oracle == quirks.
 
 The per-turn text-equality invariant (BASELINE.json input_hint) is the
 full-frame comparison in test_parse_parity_fixture.
@@ -7,11 +7,14 @@ full-frame comparison in test_parse_parity_fixture.
 import datetime as dt
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
-from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_arrow import (
+    parse_arrays,
+)
+from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
     parse_stage,
-    parse_text_frame,
 )
 from oracle.reference_oracle import parse_line
 
@@ -64,6 +67,12 @@ EDGE_LINES = [
 ]
 
 
+def parse_frame(lines) -> pd.DataFrame:
+    """The bare Arrow kernel over a list of lines, as a pandas frame."""
+    out = parse_arrays(pa.array(lines, pa.string()))
+    return pd.DataFrame({k: v.to_pandas() for k, v in out.items()})
+
+
 def _oracle_frame(lines):
     rows = []
     for line in lines:
@@ -84,7 +93,7 @@ def _oracle_frame(lines):
 def _normalize(df):
     out = df.copy()
     out["level_ord"] = out["level_ord"].astype("Float64")
-    out["ts_parsed"] = pd.to_datetime(out["ts_parsed"])
+    out["ts_parsed"] = pd.to_datetime(out["ts_parsed"]).astype("datetime64[ns]")
     out["error"] = out["error"].astype(object).where(out["error"].notna(), None)
     out["source"] = out["source"].astype(object).where(out["source"].notna(), None)
     out["message"] = out["message"].astype(object).where(out["message"].notna(), None)
@@ -94,7 +103,7 @@ def _normalize(df):
 
 
 def test_parse_edge_lines_match_oracle():
-    got = _normalize(parse_text_frame(pd.Series(EDGE_LINES)))
+    got = _normalize(parse_frame(EDGE_LINES))
     want = _normalize(_oracle_frame(EDGE_LINES))
     pd.testing.assert_frame_equal(got, want)
 
@@ -102,27 +111,27 @@ def test_parse_edge_lines_match_oracle():
 def test_parse_parity_fixture(fixture_pdf):
     """Per-turn equality of every parsed field on the full t_small fixture."""
     lines = fixture_pdf["text"].tolist()
-    got = _normalize(parse_text_frame(pd.Series(lines)))
+    got = _normalize(parse_frame(lines))
     want = _normalize(_oracle_frame(lines))
     pd.testing.assert_frame_equal(got, want)
 
 
 def test_source_quirk_bracket_is_level():
     """P4 quirk: plain '[LEVEL]' lines parse source == LEVEL token."""
-    out = parse_text_frame(pd.Series(
-        ["2025-01-01 10:00:00 [INFO] auth-service - User login successful"]))
+    out = parse_frame(
+        ["2025-01-01 10:00:00 [INFO] auth-service - User login successful"])
     assert out.loc[0, "source"] == "INFO"
     assert out.loc[0, "message"] == "- User login successful"
 
 
 def test_level_order_quirk():
-    out = parse_text_frame(pd.Series(
-        ["2025-01-01 10:00:00 [ERROR] svc - info mismatch found"]))
+    out = parse_frame(
+        ["2025-01-01 10:00:00 [ERROR] svc - info mismatch found"])
     assert out.loc[0, "level_ord"] == 2  # INFO wins by search order
 
 
 @pytest.mark.usefixtures("spark")
-def test_parse_stage_spark_matches_pandas(spark, fixture_df, fixture_pdf):
+def test_parse_stage_spark_matches_oracle(spark, fixture_df, fixture_pdf):
     got = (
         parse_stage(fixture_df)
         .select("conv_id", "turn_idx", "malformed", "error", "was_json",

@@ -1,98 +1,23 @@
-"""Arrow-native parse path == pandas path == oracle."""
+"""The batch pipeline's narrowed Arrow parse stage."""
 
 import pandas as pd
-import pyarrow as pa
-import pytest
-from hypothesis import given, settings, strategies as st
-
-from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
-    parse_text_frame,
-)
-from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_arrow import (
-    parse_arrays,
-)
-from tests.test_parse import EDGE_LINES
-from tests.test_parse_fuzz import line_st
 
 
-def _arrow_frame(lines):
-    out = parse_arrays(pa.array(lines, pa.string()))
-    df = pd.DataFrame({k: v.to_pandas() for k, v in out.items()})
-    return df
-
-
-def _norm(df):
-    out = df.copy()
-    out["level_ord"] = out["level_ord"].astype("Float64")
-    out["ts_parsed"] = pd.to_datetime(out["ts_parsed"]).astype("datetime64[ns]")
-    for c in ("error", "source", "message"):
-        out[c] = out[c].astype(object).where(out[c].notna(), None)
-    out["malformed"] = out["malformed"].astype(bool)
-    out["was_json"] = out["was_json"].astype(bool)
-    return out.reset_index(drop=True)
-
-
-def test_arrow_matches_pandas_edges():
-    got = _norm(_arrow_frame(EDGE_LINES))
-    want = _norm(parse_text_frame(pd.Series(EDGE_LINES)))
-    pd.testing.assert_frame_equal(got, want)
-
-
-def test_arrow_matches_pandas_fixture(fixture_pdf):
-    lines = fixture_pdf["text"].tolist()
-    got = _norm(_arrow_frame(lines))
-    want = _norm(parse_text_frame(pd.Series(lines)))
-    pd.testing.assert_frame_equal(got, want)
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(line_st, min_size=1, max_size=20))
-def test_arrow_matches_pandas_fuzz(lines):
-    got = _norm(_arrow_frame(lines))
-    want = _norm(parse_text_frame(pd.Series(lines)))
-    pd.testing.assert_frame_equal(got, want)
-
-
-def test_parse_stage_arrow_spark(spark, fixture_df, fixture_pdf):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_arrow import (
-        parse_stage_arrow,
-    )
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
-        parse_stage,
-    )
-
-    cols = ["conv_id", "turn_idx", "malformed", "error", "was_json",
-            "ts_parsed", "level_ord", "source", "message"]
-    got = (
-        parse_stage_arrow(fixture_df).select(*cols).toPandas()
-        .sort_values(["conv_id", "turn_idx"], ignore_index=True)
-    )
-    want = (
-        parse_stage(fixture_df).select(*cols).toPandas()
-        .sort_values(["conv_id", "turn_idx"], ignore_index=True)
-    )
-    pd.testing.assert_frame_equal(got, want)
-
-
-def test_parse_stage_pipeline_narrow(spark, fixture_df, monkeypatch):
-    """parse_stage_pipeline == parse_stage minus PIPELINE_DROP, on BOTH
-    implementations: same rows, same values in every kept column, and none
-    of the dropped columns in the schema (the Arrow path must drop them
-    inside the exchange without disturbing the kept ones)."""
+def test_parse_stage_pipeline_narrow(spark, fixture_df):
+    """parse_stage_pipeline == parse_stage minus PIPELINE_DROP: same rows,
+    same values in every kept column, and none of the dropped columns in the
+    schema (the Arrow stage must drop them inside the exchange without
+    disturbing the kept ones)."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         PIPELINE_DROP,
         parse_stage,
         parse_stage_pipeline,
     )
 
-    for impl in ("arrow", "pandas"):
-        monkeypatch.setenv("SPARK_GRAFT_PARSE_IMPL", impl)
-        got = parse_stage_pipeline(fixture_df)
-        assert not set(PIPELINE_DROP) & set(got.columns), impl
-        want = parse_stage(fixture_df).drop(*PIPELINE_DROP)
-        assert got.columns == want.columns, impl
-        g = got.toPandas().sort_values(["conv_id", "turn_idx"],
-                                       ignore_index=True)
-        w = want.toPandas().sort_values(["conv_id", "turn_idx"],
-                                        ignore_index=True)
-        pd.testing.assert_frame_equal(g, w)
+    got = parse_stage_pipeline(fixture_df)
+    assert not set(PIPELINE_DROP) & set(got.columns)
+    want = parse_stage(fixture_df).drop(*PIPELINE_DROP)
+    assert got.columns == want.columns
+    g = got.toPandas().sort_values(["conv_id", "turn_idx"], ignore_index=True)
+    w = want.toPandas().sort_values(["conv_id", "turn_idx"], ignore_index=True)
+    pd.testing.assert_frame_equal(g, w)

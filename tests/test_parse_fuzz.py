@@ -1,14 +1,12 @@
-"""Property test: the vectorized pandas parse == the per-row oracle on
+"""Property test: the Arrow parse kernel == the per-row oracle on
 adversarial inputs (quote/backslash/colon/bracket soup, truncated JSON,
 unicode, odd whitespace)."""
 
 import pandas as pd
 from hypothesis import given, settings, strategies as st
 
-from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
-    parse_text_frame,
-)
 from oracle.reference_oracle import parse_line
+from tests.test_parse import parse_frame
 
 ALPHABET = (
     "abcXYZ019 \t:{}[]\"'\\,-.@#%?_"
@@ -40,10 +38,10 @@ def _row(line):
     return ("OK", None, e["ts"], e["level"], e["source"], e["message"])
 
 
-@settings(max_examples=300, deadline=None)
+@settings(max_examples=500, deadline=None)
 @given(st.lists(line_st, min_size=1, max_size=20))
 def test_parse_matches_oracle_fuzz(lines):
-    got = parse_text_frame(pd.Series(lines))
+    got = parse_frame(lines)
     for i, line in enumerate(lines):
         status, err, ts, level, source, message = _row(line)
         if status == "MALFORMED":

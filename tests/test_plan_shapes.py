@@ -17,7 +17,7 @@ def test_parquet_pushdown_and_pruning(spark):
 
 
 def test_enrich_is_broadcast_only(spark, fixture_df):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.enrich import (
@@ -31,7 +31,7 @@ def test_enrich_is_broadcast_only(spark, fixture_df):
 
 
 def test_routing_is_broadcast(spark, fixture_df):
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.enrich import dims
@@ -54,7 +54,7 @@ def test_fused_online_single_sort(spark, fixture_pdf):
     """W1+W2 fused pass: ONE Exchange hashpartitioning(conv_id, source) and
     ONE Sort — the rank/prefix windows order by (epoch, turn_idx) and the
     range frames by (epoch), both satisfied by the same physical sort."""
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.online_fused import (
@@ -77,7 +77,7 @@ def test_burst_single_exchange(spark, fixture_pdf):
     shuffle: the count-window already hash-partitions by (conv_id,
     burst_key), and the executed plan keeps exactly ONE Exchange (verified
     round 4 per ADVICE; this pins it)."""
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.burst import (
@@ -101,7 +101,7 @@ def test_sequence_counts_no_lead_string_exchange(spark, fixture_pdf):
     the plan carries the s1..s9 lead-string columns."""
     import re
 
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.pattern import (
@@ -134,26 +134,38 @@ def test_sequence_counts_no_lead_string_exchange(spark, fixture_pdf):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_parse_evaluated_once_in_spike(spark, fixture_pdf):
-    """The nondeterministic flag must keep Catalyst from duplicating the
-    Arrow parse stage per consumer (one ArrowEvalPython for parse + one for
-    the description formatter). Uses a FRESH uncached input so the cache
-    manager cannot substitute persisted subtrees from other tests (their
-    plan descriptions would pollute the string counts)."""
-    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse import (
+def test_parse_evaluated_once_per_online_detector(spark, fixture_pdf):
+    """Each online detector's plan holds exactly one Arrow parse: no
+    detector makes Catalyst evaluate the parse twice. (``online_anomalies``
+    itself unions four consumers of the parsed frame, so over an unpersisted
+    parse its plan holds one per branch; the pipeline persists the parsed
+    frame first.) Uses a FRESH uncached input so the cache manager cannot
+    substitute persisted subtrees from other tests (their plan descriptions
+    would pollute the string counts)."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
         parse_stage,
     )
-    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.spike import (
-        spike_anomalies,
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.burst import (
+        burst_anomalies,
+    )
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.online_fused import (
+        spike_statistical_anomalies,
+    )
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.rare_ip import (
+        rare_ip_anomalies,
+    )
+    from intelligent_log_analysis_anomaly_detection_tool_spark.plans.pipeline import (
+        parser_anomalies,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.schema import (
         TRANSCRIPTS_SCHEMA,
     )
 
     fresh = spark.createDataFrame(fixture_pdf.head(500), schema=TRANSCRIPTS_SCHEMA)
-    p = _plan(spike_anomalies(parse_stage(fresh)))
-    if "InMemoryRelation" in p:  # another test cached an identical subtree
-        return
-    assert p.count("parse_text_frame") == 1, p
-    # merged window sorts: one rn sort + one epoch sort
-    assert p.count("+- Sort") <= 3
+    parsed = parse_stage(fresh)
+    for detector in (parser_anomalies, spike_statistical_anomalies,
+                     burst_anomalies, rare_ip_anomalies):
+        p = _plan(detector(parsed))
+        if "InMemoryRelation" in p:  # another test cached an identical subtree
+            continue
+        assert p.count("MapInArrow") == 1, (detector.__name__, p)
