@@ -57,6 +57,52 @@ def normalized_message(col: Column) -> Column:
     return F.trim(s)
 
 
+def burst_key() -> Column:
+    """W3's per-conversation group key: a 64-bit hash of (source, level,
+    normalized message), so the ~100-byte normalized string never travels
+    through an exchange or into streaming state. The batch scan and the
+    streaming state store key by this same column."""
+    return F.xxhash64(
+        F.col("source"), F.col("level_ord"), normalized_message(F.col("message"))
+    )
+
+
+def burst_description(count: int, window_s: int) -> str:
+    return f"Burst repetition detected: {count} repeats within {window_s}s"
+
+
+def burst_walk(
+    ret: list[int], epochs: list[int], window_s: int, min_repeats: int
+) -> list[tuple[int, int, int, int]]:
+    """The trim-on-emit deque walk (BurstPatternDetector.cpp:75-116) over one
+    group's next rows, in arrival order.
+
+    ``ret`` holds the group's retained epochs and is mutated in place, so a
+    caller carries it to the next call for the same group (the next Arrow
+    batch, or the next streaming trigger). Each epoch is appended, rows with
+    age > ``window_s`` are evicted (age == window is kept), and when the
+    count reaches ``min_repeats`` a firing ``(offset into epochs, first,
+    last, count)`` is reported; above ``min_repeats`` the deque is then
+    trimmed to its last ``min_repeats // 2`` epochs. So ``ret`` never ends a
+    row above ``min_repeats`` elements, which bounds every carried state."""
+    keep = max(1, min_repeats // 2)
+    fired = []
+    for i, t in enumerate(epochs):
+        ret.append(t)
+        lo = t - window_s
+        k = 0
+        while ret[k] < lo:
+            k += 1
+        if k:
+            del ret[:k]
+        c = len(ret)
+        if c >= min_repeats:
+            fired.append((i, ret[0], ret[-1], c))
+            if c > min_repeats:
+                del ret[:-keep]
+    return fired
+
+
 _OUT_COLS = [
     "conv_id", "turn_idx", "window_start", "window_end",
     "score", "source", "description",
@@ -68,52 +114,39 @@ def _scan_factory(window_s: int, min_repeats: int):
 
     Input batches arrive hash-partitioned by (conv_id, burst_key) and sorted
     by (conv_id, burst_key, turn_idx), so each group's rows are contiguous —
-    possibly spanning Arrow batches. Group state carried across batches is
-    only the retained-event deque, which the trim-on-emit semantics bound at
-    ``min_repeats`` elements (BurstPatternDetector.cpp:75-116: fire when
-    count >= m, and when count > m trim to m//2 — so the deque never ends a
-    row above m). One python loop per row, no per-group pandas frames."""
-    keep = max(1, min_repeats // 2)
+    possibly spanning Arrow batches. Each batch is cut into runs of one
+    group and ``burst_walk`` walks each run; the only state carried across
+    batches is the in-progress group's retained deque (at most
+    ``min_repeats`` epochs). No per-group pandas frames."""
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cur = None          # (conv_id, burst_key) of the in-progress group
         ret: list[int] = []  # retained epochs of the in-progress group
         for pdf in batches:
-            ts = pdf["epoch"].to_numpy()
+            if pdf.empty:
+                continue
+            ts = pdf["epoch"].tolist()
             turns = pdf["turn_idx"].to_numpy()
             srcs = pdf["source"].to_numpy()
             convs = pdf["conv_id"].to_numpy()
             keys = pdf["burst_key"].to_numpy()
+            cuts = np.flatnonzero(
+                (convs[1:] != convs[:-1]) | (keys[1:] != keys[:-1])
+            ) + 1
+            bounds = [0, *cuts.tolist(), len(ts)]
             out = []
-            for i in range(len(ts)):
-                g = (convs[i], keys[i])
+            for s, e in zip(bounds[:-1], bounds[1:]):
+                g = (convs[s], keys[s])
                 if g != cur:
                     cur = g
                     ret = []
-                t = int(ts[i])
-                ret.append(t)
-                lo = t - window_s
-                # evict age > window (keep age == window)
-                k = 0
-                while ret[k] < lo:
-                    k += 1
-                if k:
-                    del ret[:k]
-                c = len(ret)
-                if c >= min_repeats:
-                    out.append(
-                        (
-                            convs[i],
-                            int(turns[i]),
-                            ret[0],
-                            ret[-1],
-                            float(c),
-                            srcs[i],
-                            f"Burst repetition detected: {c} repeats within {window_s}s",
-                        )
-                    )
-                    if c > min_repeats:
-                        del ret[:-keep]
+                for off, first, last, c in burst_walk(
+                    ret, ts[s:e], window_s, min_repeats
+                ):
+                    out.append((
+                        convs[s], int(turns[s + off]), first, last, float(c),
+                        srcs[s + off], burst_description(c, window_s),
+                    ))
             if out:
                 yield pd.DataFrame(out, columns=_OUT_COLS)
 
@@ -122,19 +155,14 @@ def _scan_factory(window_s: int, min_repeats: int):
 
 def burst_anomalies(parsed: DataFrame, cfg: BurstConfig = BurstConfig()) -> DataFrame:
     df = with_epoch(parsed.filter(~F.col("malformed")))
-    # shuffle key is a 64-bit hash of (source, level, normalized message) —
-    # the ~100-byte normalized string never travels through the exchange
-    key = F.xxhash64(
-        F.col("source"), F.col("level_ord"), normalized_message(F.col("message"))
-    )
-    df = df.withColumn("burst_key", key).select(
+    df = df.withColumn("burst_key", burst_key()).select(
         "conv_id", "burst_key", "turn_idx", "epoch", "source"
     )
     # Scale guard: a key with fewer than min_repeats TOTAL rows can never
     # reach min_repeats inside any 60s window, so it can never fire. The
     # cheap count-window prunes the vast majority of (conv, key) groups
-    # before the (python-side) applyInPandas scan — the shuffle partitioning
-    # it introduces is the same one applyInPandas needs, so no extra exchange.
+    # before the (python-side) mapInPandas scan — the shuffle partitioning
+    # it introduces is the same one the scan needs, so no extra exchange.
     from pyspark.sql import Window
 
     w_key = Window.partitionBy("conv_id", "burst_key")

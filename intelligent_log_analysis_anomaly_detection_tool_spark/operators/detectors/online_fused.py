@@ -19,16 +19,18 @@ SpikeDetector.hpp:143-146):
 - rateOfChange is dead code (SpikeDetector.cpp:177-180) -> ROC=0.00
 - anomaly: type FrequencySpike, window [ts-60s, ts], score = ratio
 
-W2 semantics are documented in statistical.py, whose standalone plan backs
-the ``statistical_detector`` query of ``__spark_entry__``.
+W2 semantics are documented in statistical.py. Its ``statistical_anomalies``
+(and so the ``statistical_detector`` query of ``__spark_entry__``) is this
+pass with ``spike_cfg=None``, which builds none of the W1 columns: no
+``cur``/``base`` windows, no ratio, no W1 description UDF, no W1 variant.
 
 Plan shape (pinned by tests/test_plan_shapes.py): exactly one Exchange
 hashpartitioning(conv_id, source) and one Sort
 (conv_id, source, epoch, turn_idx); the rank window orders by
 (epoch, turn_idx) and the range frames by (epoch) — the single sort
 satisfies both by prefix. The description pandas UDFs run only on fired
-rows (filter first), and both anomaly variants are emitted in one pass via
-a filtered-array explode — the same one-pass trick as
+rows (filter first), and with both detectors on, both anomaly variants are
+emitted in one pass via a filtered-array explode — the same one-pass trick as
 pattern.pattern_anomalies, so the fused branch never consumes the frame
 twice.
 
@@ -68,13 +70,32 @@ def _fmt_factory(window_s: int):
     return fmt
 
 
+def _fmt():
+    # lazy: pandas_udf registration needs an active session (Spark 4)
+    def fmt(source: pd.Series, z: pd.Series, mean: pd.Series,
+            sd: pd.Series) -> pd.Series:
+        return pd.Series(
+            [
+                f"Statistical anomaly detected (Z={zz:.2f}): {s} event rate "
+                f"deviation {abs(zz):.2f}σ from mean μ={m:.1f} σ={d:.1f}"
+                for s, zz, m, d in zip(source, z, mean, sd)
+            ],
+            index=source.index,
+        )
+
+    return pandas_udf(fmt, "string")
+
+
 def spike_statistical_anomalies(
     parsed: DataFrame,
-    spike_cfg: SpikeConfig = SpikeConfig(),
+    spike_cfg: SpikeConfig | None = SpikeConfig(),
     stat_cfg: StatisticalConfig = StatisticalConfig(),
 ) -> DataFrame:
-    from .statistical import _fmt
+    """W1 and W2 anomalies from one window pass over (conv_id, source).
 
+    ``spike_cfg=None`` runs W2 alone: the W1 windows, ratio, description UDF
+    and variant are never built, so nothing spike-only reaches the plan."""
+    spike = spike_cfg is not None
     keys = ("conv_id", "source")
     df = with_epoch(parsed.filter(~F.col("malformed")))
 
@@ -93,29 +114,31 @@ def spike_statistical_anomalies(
     # a chained withColumn re-analyzes the projection per column, which was
     # ~half the driver's plan-construction lead-in (measured round 5);
     # withColumns is one analysis round and plans identically
-    df = df.withColumns({
-        "rn": rn,
-        "cur": rn - older(spike_cfg.short_window_s),
-        "base": rn - older(spike_cfg.baseline_window_s),
-        "n_rate": rn - older(stat_cfg.rate_window_s),
-        "first_epoch": F.min("epoch").over(w_rng),
-    })
+    windows = {"rn": rn}
+    if spike:
+        windows["cur"] = rn - older(spike_cfg.short_window_s)
+        windows["base"] = rn - older(spike_cfg.baseline_window_s)
+    windows["n_rate"] = rn - older(stat_cfg.rate_window_s)
+    windows["first_epoch"] = F.min("epoch").over(w_rng)
+    df = df.withColumns(windows)
 
     # --- spike ratio (SpikeDetector.cpp:158-213) and statistical rate
     # (StatisticalDetector.cpp:154-222): plain expressions over the window
     # layer, materialized together so the prefix mean/stddev can window
     # over ``rate`` next ---
-    ratio = (F.col("cur") / F.lit(float(spike_cfg.short_window_s))) / (
-        F.col("base") / F.lit(float(spike_cfg.baseline_window_s))
-    )
+    derived = {}
+    if spike:
+        derived["ratio"] = (
+            F.col("cur") / F.lit(float(spike_cfg.short_window_s))
+        ) / (F.col("base") / F.lit(float(spike_cfg.baseline_window_s)))
     n = F.col("n_rate")
     span = F.greatest(
         F.lit(1.0), (F.col("epoch") - F.col("first_epoch")).cast("double")
     )
-    rate = F.when(
+    derived["rate"] = F.when(
         n < 2, n.cast("double") * 60.0 / float(stat_cfg.rate_window_s)
     ).otherwise(n.cast("double") / F.greatest(F.lit(1e-6), span / 60.0))
-    df = df.withColumns({"ratio": ratio, "rate": rate})
+    df = df.withColumns(derived)
 
     w_prefix = w_ev.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     df = df.withColumns({
@@ -131,36 +154,26 @@ def spike_statistical_anomalies(
     ).otherwise(F.lit(0.0))
     df = df.withColumns({"sd": sd, "z": z})
 
-    fire_spike = (
-        (F.col("source") != "")
-        & (F.col("ratio") > spike_cfg.threshold)
-        & (F.col("cur") >= spike_cfg.min_current)
-        & (F.col("base") >= spike_cfg.min_baseline)
-    )
     fire_stat = F.abs(F.col("z")) > stat_cfg.z_threshold
-    df = df.withColumns(
-        {"fire_spike": fire_spike, "fire_stat": fire_stat}
-    ).filter(F.col("fire_spike") | F.col("fire_stat"))
-
     # descriptions: Arrow UDFs evaluate only on the (few) fired rows
-    fmt_spike = _fmt_factory(spike_cfg.short_window_s)
-    df = df.withColumns({
-        "desc_spike": fmt_spike(F.col("source"), F.col("cur"), F.col("ratio")),
-        "desc_stat": _fmt()(F.col("source"), F.col("z"), F.col("mean"), F.col("sd")),
-    })
-
-    sev_spike = F.least(
-        F.lit(1.0), (F.col("ratio") - 1.0) / (spike_cfg.threshold - 1.0)
-    )
-    sev_ord_spike = (
-        F.when(sev_spike >= 0.9, S_CRIT)
-        .when(sev_spike >= 0.6, S_HIGH)
-        .otherwise(S_MED)
-    )
-    sev_stat = F.least(F.lit(1.0), F.abs(F.col("z")) / stat_cfg.z_threshold)
-    sev_ord_stat = (
-        F.when(sev_stat >= 0.9, S_HIGH).when(sev_stat >= 0.6, S_MED).otherwise(S_LOW)
-    )
+    desc_stat = _fmt()(F.col("source"), F.col("z"), F.col("mean"), F.col("sd"))
+    if spike:
+        fire_spike = (
+            (F.col("source") != "")
+            & (F.col("ratio") > spike_cfg.threshold)
+            & (F.col("cur") >= spike_cfg.min_current)
+            & (F.col("base") >= spike_cfg.min_baseline)
+        )
+        df = df.withColumns(
+            {"fire_spike": fire_spike, "fire_stat": fire_stat}
+        ).filter(F.col("fire_spike") | F.col("fire_stat"))
+        fmt_spike = _fmt_factory(spike_cfg.short_window_s)
+        df = df.withColumns({
+            "desc_spike": fmt_spike(F.col("source"), F.col("cur"), F.col("ratio")),
+            "desc_stat": desc_stat,
+        })
+    else:
+        df = df.filter(fire_stat).withColumn("desc_stat", desc_stat)
 
     def _variant(detector, atype, sev, ws, we, score, source, desc):
         return F.struct(
@@ -176,38 +189,48 @@ def spike_statistical_anomalies(
             desc.alias("description"),
         )
 
-    s_spike = F.when(
-        F.col("fire_spike"),
-        _variant(
-            "spike",
-            T_FREQ_SPIKE,
-            sev_ord_spike,
-            F.timestamp_seconds(F.col("epoch") - spike_cfg.short_window_s),
-            F.col("ts_parsed"),
-            F.col("ratio"),
-            F.when(F.col("source") == "", None).otherwise(F.col("source")),
-            F.col("desc_spike"),
-        ),
+    sev_stat = F.least(F.lit(1.0), F.abs(F.col("z")) / stat_cfg.z_threshold)
+    sev_ord_stat = (
+        F.when(sev_stat >= 0.9, S_HIGH).when(sev_stat >= 0.6, S_MED).otherwise(S_LOW)
     )
-    s_stat = F.when(
-        F.col("fire_stat"),
-        _variant(
-            "statistical",
-            T_STAT,
-            sev_ord_stat,
-            F.col("ts_parsed"),
-            F.col("ts_parsed"),
-            F.col("z"),
-            F.col("source"),
-            F.col("desc_stat"),
-        ),
+    s_stat = _variant(
+        "statistical",
+        T_STAT,
+        sev_ord_stat,
+        F.col("ts_parsed"),
+        F.col("ts_parsed"),
+        F.col("z"),
+        F.col("source"),
+        F.col("desc_stat"),
+    )
+    if not spike:
+        return as_anomaly(df.select(s_stat.alias("a")).select("a.*"))
+
+    sev_spike = F.least(
+        F.lit(1.0), (F.col("ratio") - 1.0) / (spike_cfg.threshold - 1.0)
+    )
+    sev_ord_spike = (
+        F.when(sev_spike >= 0.9, S_CRIT)
+        .when(sev_spike >= 0.6, S_HIGH)
+        .otherwise(S_MED)
+    )
+    s_spike = _variant(
+        "spike",
+        T_FREQ_SPIKE,
+        sev_ord_spike,
+        F.timestamp_seconds(F.col("epoch") - spike_cfg.short_window_s),
+        F.col("ts_parsed"),
+        F.col("ratio"),
+        F.when(F.col("source") == "", None).otherwise(F.col("source")),
+        F.col("desc_spike"),
     )
     # all window-derived values are materialized columns by now (window
     # exprs must not sit inside explode(filter(array(...)))); a null-filtered
     # array explode emits 1-2 anomaly rows per fired input row in one pass
+    variants = F.array(
+        F.when(F.col("fire_spike"), s_spike), F.when(F.col("fire_stat"), s_stat)
+    )
     out = df.select(
-        F.explode(
-            F.filter(F.array(s_spike, s_stat), lambda x: x.isNotNull())
-        ).alias("a")
+        F.explode(F.filter(variants, lambda x: x.isNotNull())).alias("a")
     ).select("a.*")
     return as_anomaly(out)

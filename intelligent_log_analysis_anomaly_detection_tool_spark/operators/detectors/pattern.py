@@ -49,8 +49,8 @@ from .common import S_MED, T_SEQ, as_anomaly
 # the "salted repartitioning" the hot-conversation skew demands, made exact
 # for sequence semantics by overlap pads (see _sig_base). 8192 keeps the
 # pad fraction at (W-1)/C ~ 0.1% while splitting a 10^6-row conversation
-# into ~120 balanced chunks; env knob for single-stage studies only.
-_CHUNK_ROWS = int(__import__("os").environ.get("SPARK_GRAFT_PATTERN_CHUNK", "8192"))
+# into ~120 balanced chunks (tests shrink it to force the multi-chunk path).
+_CHUNK_ROWS = 8192
 
 
 def event_signature(source: Column, level_ord: Column, message: Column,

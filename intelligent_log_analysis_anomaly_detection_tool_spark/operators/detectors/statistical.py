@@ -9,111 +9,26 @@ Reference semantics (/root/reference/src/anomaly/StatisticalDetector.cpp:
   first-to-current (the deque back IS the current row's ts)
 - Welford running mean/m2 over the rate sequence, UPDATED WITH the current
   value BEFORE z is computed (StatisticalDetector.cpp:40-56)
-- z = (rate - mean)/stddev_samp if count >= 10 && stddev != 0, else 0
+- z = (rate - mean)/(sample stddev) if count >= 10 && stddev != 0, else 0
 - fire iff |z| > 3.0; severity min(1,|z|/3) -> always 1.0 -> main maps to High
 - anomaly: type StatisticalOutlier, window [ts, ts], score = z (signed)
 
 Spark-first: Welford over the prefix is algebraically identical to
-``avg``/``stddev_samp`` over ``rowsBetween(unboundedPreceding, currentRow)``,
+the sample mean/stddev over ``rowsBetween(unboundedPreceding, currentRow)``,
 so the whole detector is three window expressions over (conv_id, source).
+They are built once, in ``online_fused.spike_statistical_anomalies``; this
+operator is that pass with the W1 half switched off.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import DataFrame
 
 from ...config import StatisticalConfig
-from .common import (
-    S_HIGH, S_LOW, S_MED, T_STAT, as_anomaly, event_order_window,
-    older_than_window, with_epoch,
-)
-
-
-def _fmt():
-    # lazy: pandas_udf registration needs an active session (Spark 4)
-    def fmt(source: pd.Series, z: pd.Series, mean: pd.Series,
-            sd: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                f"Statistical anomaly detected (Z={zz:.2f}): {s} event rate "
-                f"deviation {abs(zz):.2f}σ from mean μ={m:.1f} σ={d:.1f}"
-                for s, zz, m, d in zip(source, z, mean, sd)
-            ],
-            index=source.index,
-        )
-
-    return pandas_udf(fmt, "string")
+from .online_fused import spike_statistical_anomalies
 
 
 def statistical_anomalies(
     parsed: DataFrame, cfg: StatisticalConfig = StatisticalConfig()
 ) -> DataFrame:
-    df = with_epoch(parsed.filter(~F.col("malformed")))
-    keys = ("conv_id", "source")
-
-    # single rn window (doubles as Welford count) ordered by (epoch,
-    # turn_idx) — identical to file order under the monotonic-ts invariant —
-    # so the rank, the epoch-ordered range count/min, AND the prefix
-    # mean/stddev all share ONE sort (plan audit: 1 sort, 1 exchange)
-    df = df.withColumn("cnt", F.row_number().over(event_order_window(*keys)))
-    older = F.count(F.lit(1)).over(older_than_window(cfg.rate_window_s, *keys))
-    # min(epoch) over retained rows == min over the range frame (monotonic ts)
-    w_rng = (
-        Window.partitionBy(*keys)
-        .orderBy("epoch")
-        .rangeBetween(-cfg.rate_window_s, 0)
-    )
-    df = df.withColumn("n_rate", F.col("cnt") - older).withColumn(
-        "first_epoch", F.min("epoch").over(w_rng)
-    )
-    n = F.col("n_rate")
-    span = F.greatest(
-        F.lit(1.0), (F.col("epoch") - F.col("first_epoch")).cast("double")
-    )
-    rate = F.when(
-        n < 2, n.cast("double") * 60.0 / float(cfg.rate_window_s)
-    ).otherwise(n.cast("double") / F.greatest(F.lit(1e-6), span / 60.0))
-    df = df.withColumn("rate", rate)
-
-    w_prefix = (
-        event_order_window(*keys)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sd_raw = F.stddev_samp("rate").over(w_prefix)
-    df = (
-        df.withColumn("mean", F.avg("rate").over(w_prefix))
-        .withColumn("sd_raw", sd_raw)
-        .withColumn(
-            "sd",
-            F.coalesce(
-                F.when(F.col("sd_raw") > 0.0, F.col("sd_raw")), F.lit(0.0)
-            ),
-        )
-    )
-    z = F.when(
-        (F.col("cnt") >= cfg.warmup_count) & (F.col("sd") != 0.0),
-        (F.col("rate") - F.col("mean")) / F.col("sd"),
-    ).otherwise(F.lit(0.0))
-    df = df.withColumn("z", z).filter(F.abs(F.col("z")) > cfg.z_threshold)
-
-    sev = F.least(F.lit(1.0), F.abs(F.col("z")) / cfg.z_threshold)
-    sev_ord = F.when(sev >= 0.9, S_HIGH).when(sev >= 0.6, S_MED).otherwise(S_LOW)
-    out = df.select(
-        "conv_id",
-        "turn_idx",
-        F.lit("statistical").alias("detector"),
-        F.lit(T_STAT).alias("anomaly_type"),
-        sev_ord.alias("severity"),
-        F.col("ts_parsed").alias("window_start"),
-        F.col("ts_parsed").alias("window_end"),
-        F.col("z").alias("score"),
-        F.col("source"),
-        _fmt()(F.col("source"), F.col("z"), F.col("mean"), F.col("sd")).alias(
-            "description"
-        ),
-    )
-    return as_anomaly(out)
+    return spike_statistical_anomalies(parsed, spike_cfg=None, stat_cfg=cfg)

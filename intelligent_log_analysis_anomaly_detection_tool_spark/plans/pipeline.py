@@ -82,8 +82,8 @@ def online_anomalies(parsed: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG,
     """Per-entry detector fires (rule stage contributes zero rows in faithful
     mode, F9). Union order mirrors main.cpp:283-360; W1+W2 run as ONE fused
     window pass (they share the (conv_id, source) sort — see
-    detectors/online_fused.py), emitting the same W2 rows as the standalone
-    statistical_anomalies operator."""
+    detectors/online_fused.py, which is also the W2-only
+    statistical_anomalies operator)."""
     from ..operators.detectors.online_fused import spike_statistical_anomalies
 
     out = (

@@ -6,8 +6,10 @@ loop; real-time support is listed under Future Improvements,
 the SAME parse stage (``mapInArrow`` runs unchanged on streaming frames), a
 watermarked per-minute windowed pivot (A1's streaming twin), and the one
 genuinely stateful operator (W3 burst) as ``applyInPandasWithState`` —
-per-key deque state with the reference's trim-on-emit semantics
-(BurstPatternDetector.cpp:75-116).
+per-key deque state walked by the batch detector's own kernel
+(``burst.burst_walk``, the reference's trim-on-emit semantics,
+BurstPatternDetector.cpp:75-116), keyed by the batch detector's own
+``burst.burst_key`` hash.
 """
 
 from __future__ import annotations
@@ -22,6 +24,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..config import BurstConfig
 from ..functions.parse_select import parse_stage
+from ..operators.detectors.burst import (
+    burst_description, burst_key, burst_walk,
+)
+from ..operators.detectors.common import with_epoch
 from ..schema import TRANSCRIPTS_SCHEMA
 
 
@@ -51,7 +57,7 @@ def streaming_minute_counts(stream: DataFrame,
 
 
 _BURST_OUT = (
-    "conv_id string, burst_key string, turn_idx int, window_start long, "
+    "conv_id string, burst_key long, turn_idx int, window_start long, "
     "window_end long, score double, description string"
 )
 _BURST_STATE = "epochs array<long>"
@@ -59,39 +65,24 @@ _BURST_STATE = "epochs array<long>"
 
 def _burst_state_fn(cfg: BurstConfig):
     window_s, min_repeats = cfg.window_s, cfg.min_repeats
-    keep = max(1, min_repeats // 2)
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        conv_id, burst_key = key
+        conv_id, key_hash = key
         (epochs,) = state.get if state.exists else ([],)
-        dq = list(epochs)
-        out = []
+        ret = list(epochs)
         # a group's rows may arrive as several chunks — order is only defined
         # after concatenating the whole trigger's worth for this key
-        all_rows = pd.concat(list(pdfs), ignore_index=True)
-        for pdf in (all_rows.sort_values("turn_idx"),):
-            for turn, e in zip(pdf["turn_idx"], pdf["epoch"]):
-                e = int(e)
-                dq.append(e)
-                lo = e - window_s
-                k = 0
-                while k < len(dq) and dq[k] < lo:
-                    k += 1
-                if k:
-                    dq = dq[k:]
-                c = len(dq)
-                if c >= min_repeats:
-                    out.append(
-                        (conv_id, burst_key, int(turn), dq[0], dq[-1], float(c),
-                         f"Burst repetition detected: {c} repeats within "
-                         f"{window_s}s")
-                    )
-                    if c > min_repeats:
-                        dq = dq[-keep:]
-        state.update((dq,))
-        if out:
+        rows = pd.concat(list(pdfs), ignore_index=True).sort_values("turn_idx")
+        turns = rows["turn_idx"].tolist()
+        fired = burst_walk(ret, rows["epoch"].tolist(), window_s, min_repeats)
+        state.update((ret,))
+        if fired:
             yield pd.DataFrame(
-                out,
+                [
+                    (conv_id, key_hash, turns[off], first, last, float(c),
+                     burst_description(c, window_s))
+                    for off, first, last, c in fired
+                ],
                 columns=["conv_id", "burst_key", "turn_idx", "window_start",
                          "window_end", "score", "description"],
             )
@@ -104,16 +95,10 @@ def streaming_burst(stream: DataFrame,
     """W3 as a stateful streaming operator: per-(conv, key) bounded deque
     state, exact trim-on-emit semantics. Correct under the engine's ordering
     contract (turn_idx arrives non-decreasing per conversation)."""
-    from ..operators.detectors.burst import normalized_message
-
     parsed = parse_stage(stream).filter(~F.col("malformed"))
-    key = F.concat_ws(
-        "|", F.col("source"), F.col("level_ord").cast("string"),
-        normalized_message(F.col("message")),
+    keyed = with_epoch(parsed.withColumn("burst_key", burst_key())).select(
+        "conv_id", "burst_key", "turn_idx", "epoch"
     )
-    keyed = parsed.withColumn("burst_key", key).withColumn(
-        "epoch", F.unix_timestamp("ts_parsed")
-    ).select("conv_id", "burst_key", "turn_idx", "epoch")
     return keyed.groupBy("conv_id", "burst_key").applyInPandasWithState(
         _burst_state_fn(cfg),
         outputStructType=_BURST_OUT,

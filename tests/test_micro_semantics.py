@@ -42,9 +42,10 @@ def _parse(spark, df):
 
 def test_trailing_window_boundary_inclusive(spark):
     """SpikeDetector evicts strictly age > W (SpikeDetector.cpp:55-60): a row
-    exactly 60s old is KEPT. Verified via the spike 'cur' count construction."""
+    exactly 60s old is KEPT. Verified via the rank-minus-evicted count the
+    THRESHOLD rule uses (the fused W1 pass builds ``cur`` the same way)."""
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.common import (
-        trailing_count,
+        trailing_count_event_time,
     )
     from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.common import (
         with_epoch,
@@ -55,7 +56,7 @@ def test_trailing_window_boundary_inclusive(spark):
                        (61, _line(T0 + dt.timedelta(seconds=61)))])
     parsed = with_epoch(_parse(spark, df))
     out = (
-        parsed.withColumn("cur", trailing_count(60, "conv_id", "source"))
+        parsed.withColumn("cur", trailing_count_event_time(60, "conv_id", "source"))
         .orderBy("turn_idx")
         .select("cur")
         .toPandas()["cur"]
@@ -82,6 +83,38 @@ def test_burst_fire_pattern_19_20_21_and_refill(spark, ):
     # trim->10) — every (10,11) cycle afterwards
     assert got["turn_idx"].tolist() == [19, 20, 30, 31]
     assert got["score"].tolist() == [20.0, 21.0, 20.0, 21.0]
+
+
+def test_burst_walk_carry_is_split_invariant():
+    """The shared W3 kernel (batch scan and streaming state both call it)
+    gives the same firings and final deque whether a group's rows come in one
+    call or split across two calls that carry ``ret`` — the Arrow-batch and
+    trigger boundaries. Epochs: the 19/20/21/refill pattern above, then a
+    second burst after a gap that evicts the whole deque."""
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.burst import (
+        burst_walk,
+    )
+
+    t0 = int(T0.replace(tzinfo=dt.timezone.utc).timestamp())
+    epochs = [t0 + i for i in range(40)] + [t0 + 200 + 2 * i for i in range(25)]
+
+    whole_ret: list[int] = []
+    whole = burst_walk(whole_ret, epochs, 60, 20)
+    assert [(off, c) for off, _, _, c in whole] == [
+        (19, 20), (20, 21), (30, 20), (31, 21), (59, 20), (60, 21),
+    ]
+    assert whole[0][1:3] == (t0, t0 + 19)
+    assert len(whole_ret) <= 20
+
+    for k in range(len(epochs) + 1):
+        ret: list[int] = []
+        fired = burst_walk(ret, epochs[:k], 60, 20)
+        fired += [
+            (off + k, first, last, c)
+            for off, first, last, c in burst_walk(ret, epochs[k:], 60, 20)
+        ]
+        assert fired == whole, k
+        assert ret == whole_ret, k
 
 
 def test_zscore_warmup_no_fire_before_10(spark):

@@ -72,6 +72,42 @@ def test_fused_online_single_sort(spark, fixture_pdf):
     assert p.count("+- Sort") == 1, p
 
 
+def test_statistical_only_plan_has_no_spike_columns(spark, fixture_pdf):
+    """W2 alone (``statistical_anomalies``: the fused pass with
+    ``spike_cfg=None``) keeps the former standalone W2 plan's shape — one
+    Exchange hashpartitioning(conv_id, source), one Sort, three Window
+    operators — and exactly one ArrowEvalPython, the W2 description: no
+    W1 windows, ratio or description UDF reach the plan."""
+    import re
+
+    from intelligent_log_analysis_anomaly_detection_tool_spark.functions.parse_select import (
+        parse_stage,
+    )
+    from intelligent_log_analysis_anomaly_detection_tool_spark.operators.detectors.statistical import (
+        statistical_anomalies,
+    )
+    from intelligent_log_analysis_anomaly_detection_tool_spark.schema import (
+        TRANSCRIPTS_SCHEMA,
+    )
+
+    fresh = spark.createDataFrame(fixture_pdf.head(500), schema=TRANSCRIPTS_SCHEMA)
+    p = _plan(statistical_anomalies(parse_stage(fresh)))
+    if "InMemoryRelation" in p:
+        return
+    assert p.count("Exchange") == 1, p
+    assert re.search(r"Exchange hashpartitioning\(conv_id#\d+, source#\d+, ", p), p
+    assert p.count("+- Sort") == 1, p
+    assert p.count("+- Window [") == 3, p
+    evals = [line for line in p.splitlines() if "ArrowEvalPython" in line]
+    assert len(evals) == 1, p
+    assert re.search(
+        r"ArrowEvalPython \[fmt\(source#\d+, z#\d+, mean#\d+, sd#\d+\)#\d+\]",
+        evals[0],
+    ), evals[0]
+    for spike_col in ("cur#", "base#", "ratio#"):
+        assert spike_col not in p, (spike_col, p)
+
+
 def test_burst_single_exchange(spark, fixture_pdf):
     """The burst scan's explicit repartition must not introduce a second
     shuffle: the count-window already hash-partitions by (conv_id,
